@@ -904,8 +904,8 @@ object Queries {
       // bootstrap weights): TWO base md5 draws per row + an affine combo
       // per replicate, instead of one md5 per (row, replicate). At sf10
       // the weight lanes ARE the query cost, and the md5 count is 8x of
-      // it — measured 24 s -> 6.6 s on the whole Gram pass
-      // (tools/BootstrapDrawProbe). No overflow: h1, h2 < 2^56 and
+      // it — measured 24 s -> 6.6 s on the whole Gram pass (r14 probe,
+      // receipt in SURVEY.md). No overflow: h1, h2 < 2^56 and
       // r <= 8 keeps h1 + r*h2 < 2^60. The DuckDB oracle replays the
       // identical arithmetic on the same two md5-derived bases.
       val mod = 1L << 56

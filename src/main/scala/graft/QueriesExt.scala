@@ -243,7 +243,7 @@ object QueriesExt {
     }),
 
     // ---- PCA over embeddings: the d-dim mean + d x d covariance is ONE
-    // treeAggregate pass, the eigen-solve is driver-side power iteration
+    // Reduce pass, the eigen-solve is driver-side power iteration
     // (d never grows with the data), and the projection is a codegen
     // zip_with/aggregate expression. Pinned 3 rounds from v0 = 1/sqrt(d)
     // so the whole fixpoint replays as SQL; the production fit (more
@@ -282,7 +282,7 @@ object QueriesExt {
     }),
 
     // ---- mergeable count-min sketch: per-partition depth x width count
-    // grids fold up a treeAggregate (the corpus never shuffles; the
+    // grids fold in one Reduce pass (the corpus never shuffles; the
     // driver holds O(depth*width) no matter the corpus size). Exact
     // oracle: Kirsch-Mitzenmacher buckets from hash56 regenerate the
     // identical grid in SQL. Output: the 15 most frequent tokens with
@@ -309,7 +309,7 @@ object QueriesExt {
     }),
 
     // linear-counting distinct-cardinality sketch, all language groups
-    // in one bitmap-lane treeAggregate; output pins occupied bits, the
+    // in one bitmap-lane Reduce pass; output pins occupied bits, the
     // collision-corrected estimate AND the exact distinct count
     "q_distinct_sketch" -> ((s, d) => {
       val docs = t(s, d, "documents")

@@ -11,8 +11,9 @@ import org.apache.spark.sql.functions._
   * reference implements as an in-memory matrix factorization
   * (`oaxaca_blinder/src/math/ols.rs:44-144`, `logit.rs:51-70`,
   * `probit.rs:82-112`) reduces to one pass of this aggregation. The
-  * partial-merge is matrix addition, so it `treeAggregate`s linearly at
-  * any data size, and only k-dimensional objects ever reach the driver.
+  * partial-merge is matrix addition, folded by [[Reduce]] in partition
+  * order, so the sums are bit-identical for a given partitioning at any
+  * task timing, and only k-dimensional objects ever reach the driver.
   */
 final case class GramResult(
     k: Int,
@@ -121,15 +122,17 @@ final class GramBuffer(val k: Int, val lanes: Int, val repsTotal: Int)
 
   // scratch for the per-row sufficient-statistic vector (outer product,
   // x*y, 1, y, y^2) and the per-rep effective weights; safe because
-  // treeAggregate applies seqOp serially per partition buffer
+  // Reduce folds each partition serially into its own buffer
   private val scratch = new Array[Double](stride)
   private val wrScratch = new Array[Double](repsTotal)
 
   // per-row input scratch reused across rows by the seqOps — a 500-rep
   // bootstrap otherwise allocates a 4 KB multiplier array PER ROW
-  // (gigabytes of garbage over a full scan)
+  // (gigabytes of garbage over a full scan); zw holds an IRLS pass's
+  // working (response, weight)
   val xRow = new Array[Double](k)
   val repMult = new Array[Double](repsTotal)
+  val zw = new Array[Double](2)
 
   /** Add one observation to `lane` with per-rep weight multipliers. The
     * row's outer product is computed ONCE and scaled per replicate. */
@@ -311,13 +314,12 @@ object Gram {
         proj0.repartition(64)
       else proj0
     val repsTotal = nReps + 1
-    val zero = new GramBuffer(k, nLanes, repsTotal)
     // toRdd: the codegen'd UnsafeRow stream, no per-row boxing into Row
     // (safe here: seqOp reads each field once and retains nothing)
-    val res = Jobs.labeled(df.sparkSession,
-      s"gram: ${nLanes}-lane ${repsTotal}-rep fused scan") {
-    proj.queryExecution.toRdd.treeAggregate(zero)(
-      seqOp = (buf, row) => {
+    val res = Reduce(proj.queryExecution.toRdd,
+      s"gram: ${nLanes}-lane ${repsTotal}-rep fused scan",
+      () => new GramBuffer(k, nLanes, repsTotal))(
+      (buf, row) => {
         val lane = if (row.isNullAt(2)) -1 else row.getInt(2)
         if (lane >= 0 && lane < nLanes) {
           // The UnsafeRow stream reads a null double as 0.0; fail loudly
@@ -367,9 +369,7 @@ object Gram {
         }
         buf
       },
-      combOp = (a, b) => a.merge(b),
-      depth = 2)
-    }
+      _ merge _)
     val grams = Array.tabulate(nLanes)(l =>
       Array.tabulate(repsTotal)(r => res.result(l, r)))
     (grams, trackCol.map(_ =>
@@ -411,9 +411,10 @@ object Gram {
         proj0.repartition(64)
       else proj0
     val kBase = xCols.size
-    val zero = new GramBuffer(k, nLanes, nSys)
-    val res = proj.queryExecution.toRdd.treeAggregate(zero)(
-      seqOp = (buf, row) => {
+    val res = Reduce(proj.queryExecution.toRdd,
+      s"gram: ${nLanes}-lane ${nSys}-system multi pass",
+      () => new GramBuffer(k, nLanes, nSys))(
+      (buf, row) => {
         val lane = if (row.isNullAt(0)) -1 else row.getInt(0)
         if (lane >= 0 && lane < nLanes) {
           // same null discipline as computeGrouped: loud, not 0.0
@@ -436,8 +437,7 @@ object Gram {
         }
         buf
       },
-      combOp = (a, b) => a.merge(b),
-      depth = 2)
+      _ merge _)
     Array.tabulate(nLanes)(l => Array.tabulate(nSys)(s => res.result(l, s)))
   }
 

@@ -551,7 +551,7 @@ object Oaxaca {
       withW = withW.withColumn(s"__bw_$r",
         pois(hashCol, lit(cfg.seed + r.toLong)) * baseW)
     }
-    // NOT persisted: the probit iterations read IrlsDesignLanes' own
+    // NOT persisted: the probit iterations read IrlsDesign's own
     // compact persisted RDD, so this frame is scanned only thrice (design
     // build, selected-rows Gram, stats pass) — and the draws are
     // deterministic hash functions of the row (PoissonDraw over hashCol),

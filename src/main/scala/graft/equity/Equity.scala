@@ -103,12 +103,6 @@ final case class OptimizeResult(
     metrics: OptimizeMetrics,
     model: FairModel,
     idCol: String,
-    /** Releases the optimizer's internal annotated-frame cache when the
-      * call was made with `keepAnnotated = true` (compositions hold it
-      * until they have materialized the allocation, so the allocation
-      * plan executes against the cache instead of recomputing). No-op
-      * otherwise. */
-    releaseCache: () => Unit = () => (),
     /** Normalized bucket boundaries (signed -diff key space) from the
       * sums pass's percentile lane, when the caller asked for them —
       * lets a composition (Frontier) run its own prefix sum over the
@@ -150,20 +144,13 @@ object Equity {
   }
 
   /** One prepare + one Gram pass — the shared front half of every
-    * G2/G3/G4/G5 composition. `persistDummied` (default off) is the
-    * scale knob: when the source is NOT already cached upstream, caching
-    * the prepared frame saves its 2-4 consumers a full source scan each;
-    * when it is (the harness's row-id frame, or any user-persisted
-    * input), the cheap codegen re-derivation beats paying a second
-    * full-width cache write. Callers that persist also unpersist. */
-  private[graft] def prepareAndGram(df: DataFrame, cfg: EquityConfig,
-      persistDummied: Boolean = false)
+    * G2/G3/G4/G5 composition. The prepared frame is NOT persisted: its
+    * 2-4 consumers re-derive it as cheap codegen over the caller's
+    * source (the harness's row-id frame, or any user-persisted input),
+    * which beats paying a second full-width cache write. */
+  private[graft] def prepareAndGram(df: DataFrame, cfg: EquityConfig)
       : (EquityPrep, Array[Array[GramResult]]) = {
-    val (dummied0, xCols, infos) = prepareFrame(df, cfg)
-    val dummied =
-      if (persistDummied) dummied0.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else dummied0
+    val (dummied, xCols, infos) = prepareFrame(df, cfg)
     // split discovery rides the Gram scan (one job, not distinct+scan):
     // the same fused pass as Oaxaca.run's common path
     val (split, lanes) = Prep.splitGroupsWithGram(dummied, cfg.group,
@@ -206,7 +193,7 @@ object Equity {
   private[graft] def optimizePrepared(dummied: DataFrame, xCols: Seq[String],
       names: Seq[String], split: Prep.GroupSplit,
       lanes: Array[Array[GramResult]], cfg: EquityConfig,
-      idCol: String, keepAnnotated: Boolean = false,
+      idCol: String,
       wantPrefixBoundaries: Boolean = false): OptimizeResult = {
     val gTarget = lanes(0)(0) // non-reference = target group
     val gRef = lanes(1)(0)
@@ -257,7 +244,6 @@ object Equity {
       if (cfg.forensic) lit(true)
       else if (cfg.adjustBoth) col("__diff__") > 1e-6 && gapPctM >= cfg.minGapPct
       else col("__is_target__") && col("__diff__") > 1e-6 && gapPctM >= cfg.minGapPct
-    try {
 
     // The budget-constrained Greedy path needs bucket boundaries for its
     // scale-safe prefix sum (Windows.exclusivePrefixSum); ride that probe
@@ -328,8 +314,7 @@ object Equity {
 
     // lazy: every caller consumes the allocation exactly once, so its
     // window (and, for the sorted view, the sort) executes once at the
-    // caller's action (the internal aggregates above all read the
-    // cached `annotated`)
+    // caller's action
     val adjustments = paid.select(
       col(idCol),
       g.as("group_level"),
@@ -354,21 +339,7 @@ object Equity {
     OptimizeResult(adjustments,
       OptimizeMetrics(totalCost, originalGap, newGap, origUnexp, newUnexp,
         totalNeed, names.zipWithIndex.map { case (n, i) => n -> model.beta(i) }),
-      model, idCol,
-      releaseCache =
-        if (keepAnnotated) () => { annotated.unpersist(blocking = false); () }
-        else () => (),
-      prefixBoundaries = prefixBoundaries)
-    } catch {
-      // never leak the cache on failure, keepAnnotated or not
-      case t: Throwable => annotated.unpersist(blocking = false); throw t
-    } finally {
-      // compositions that pass keepAnnotated materialize the allocation
-      // against the cache and release it via releaseCache(); the plain
-      // path releases here (its caller consumes the allocation exactly
-      // once and the recompute reads the narrow upstream cache)
-      if (!keepAnnotated) { annotated.unpersist(blocking = false); () }
-    }
+      model, idCol, prefixBoundaries = prefixBoundaries)
   }
 
   /** Per-feature contribution columns x_j * beta_j (`analysis.rs:723-742`). */
@@ -418,26 +389,22 @@ object Equity {
       minPay: Double = 1e-9,
       bootstrapReps: Int = 0): (OptimizeResult, OaxacaResults) = {
     val (p, lanes) = prepareAndGram(df, cfg)
-    try {
-      val opt = optimizePrepared(p.dummied, p.xCols, p.names, p.split, lanes,
-        cfg, idCol, keepAnnotated = true)
-      // The verification decomposition consumes the adjustment set
-      // exactly ONCE: verifyPrepared's Poisson/no-bootstrap path is a
-      // single fused Gram scan (replicates ride as lanes), and the
-      // allocation enters it through ONE broadcast build. Materializing
-      // `adj` into a persist first (the pre-r16 shape) paid a whole
-      // extra execution of the allocation plan (window + scan) plus a
-      // cache write just to hand the broadcast a cached copy — pure
-      // critical-path overhead, measured ~0.4-0.6 s of q_verify's 2.3 s
-      // at sf0.1. The allocation plan is deterministic (value-bucketed
-      // prefix sum over deterministic buckets), so even a hypothetical
-      // re-execution could never change the adjustment set.
-      try {
-        val adj = opt.adjustmentsUnsorted.filter(col("adjustment") > minPay)
-          .select(col(idCol), col("adjustment"))
-        (opt, verifyPrepared(p, adj, idCol, "adjustment", cfg, bootstrapReps))
-      } finally { opt.releaseCache() }
-    } finally { p.dummied.unpersist(blocking = false); () }
+    val opt = optimizePrepared(p.dummied, p.xCols, p.names, p.split, lanes,
+      cfg, idCol)
+    // The verification decomposition consumes the adjustment set
+    // exactly ONCE: verifyPrepared's Poisson/no-bootstrap path is a
+    // single fused Gram scan (replicates ride as lanes), and the
+    // allocation enters it through ONE broadcast build. Materializing
+    // `adj` into a persist first (the pre-r16 shape) paid a whole
+    // extra execution of the allocation plan (window + scan) plus a
+    // cache write just to hand the broadcast a cached copy — pure
+    // critical-path overhead, measured ~0.4-0.6 s of q_verify's 2.3 s
+    // at sf0.1. The allocation plan is deterministic (value-bucketed
+    // prefix sum over deterministic buckets), so even a hypothetical
+    // re-execution could never change the adjustment set.
+    val adj = opt.adjustmentsUnsorted.filter(col("adjustment") > minPay)
+      .select(col(idCol), col("adjustment"))
+    (opt, verifyPrepared(p, adj, idCol, "adjustment", cfg, bootstrapReps))
   }
 
   /** P12: outcome := outcome + delta for matching row ids (broadcast
@@ -517,32 +484,28 @@ object Equity {
     * straight from the optimizer's Gram lanes (re-solved k-dimensionally
     * when the optimizer fitted on the Pooled target — defensibility
     * always judges against the Reference-fitted model). The judged frame
-    * is materialized before the prepared frame is released. */
+    * is returned lazy. */
   def optimizeAndCheckDefensibility(df: DataFrame, cfg: EquityConfig,
       idCol: String, minPay: Double = 1e-9): (OptimizeResult, DataFrame) = {
     val (p, lanes) = prepareAndGram(df, cfg)
-    try {
-      val opt = optimizePrepared(p.dummied, p.xCols, p.names, p.split, lanes,
-        cfg, idCol, keepAnnotated = true)
-      val adj = opt.adjustmentsUnsorted.filter(col("adjustment") > minPay)
-        .select(col(idCol), col("adjustment"))
-      val model =
-        if (cfg.target == OptimizationTarget.Reference) opt.model
-        else fitFairModel(lanes(0)(0), lanes(1)(0), p.xCols, p.names,
-          cfg.copy(target = OptimizationTarget.Reference))
-      // Returned LAZY: the judged frame is a broadcast join + codegen
-      // arithmetic whose caller consumes it once, so the pre-r16
-      // persist + count paid a full extra planning + execution round
-      // (measured ~0.5-0.7 s of q_defensibility's 2.7 s at sf0.1) for a
-      // cache nothing re-read more than once. Every input is
-      // deterministic (the allocation is a value-bucketed prefix sum
-      // over deterministic buckets), so a caller consuming it twice
-      // recomputes identical rows — it just pays the join twice, which
-      // is the right default for the 1-consumer contract.
-      val judged = checkDefensibilityPrepared(p, model, adj, idCol,
-        "adjustment", cfg)
-      try (opt, judged) finally { opt.releaseCache() }
-    } finally { p.dummied.unpersist(blocking = false); () }
+    val opt = optimizePrepared(p.dummied, p.xCols, p.names, p.split, lanes,
+      cfg, idCol)
+    val adj = opt.adjustmentsUnsorted.filter(col("adjustment") > minPay)
+      .select(col(idCol), col("adjustment"))
+    val model =
+      if (cfg.target == OptimizationTarget.Reference) opt.model
+      else fitFairModel(lanes(0)(0), lanes(1)(0), p.xCols, p.names,
+        cfg.copy(target = OptimizationTarget.Reference))
+    // Returned LAZY: the judged frame is a broadcast join + codegen
+    // arithmetic whose caller consumes it once, so the pre-r16
+    // persist + count paid a full extra planning + execution round
+    // (measured ~0.5-0.7 s of q_defensibility's 2.7 s at sf0.1) for a
+    // cache nothing re-read more than once. Every input is
+    // deterministic (the allocation is a value-bucketed prefix sum
+    // over deterministic buckets), so a caller consuming it twice
+    // recomputes identical rows — it just pays the join twice, which
+    // is the right default for the 1-consumer contract.
+    (opt, checkDefensibilityPrepared(p, model, adj, idCol, "adjustment", cfg))
   }
 
   /** G1 `decompose_inner` result (`engine/src/analysis.rs:98-307`):

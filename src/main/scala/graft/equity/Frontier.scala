@@ -34,11 +34,11 @@ object Frontier {
       steps: Int = 50, paymentScale: Option[Int] = None): Seq[FrontierPoint] = {
     // ONE prepare + Gram pass feeds the greedy allocation AND the pooled
     // frontier design (previously optimize re-ran both internally).
-    // persistDummied stays OFF here (measured, round 10): the frame's
-    // three consumers (Gram pass, the optimizer's annotated cache, the
+    // The prepared frame is not persisted (measured, round 10): its
+    // three consumers (Gram pass, the optimizer's annotated frame, the
     // payments broadcast join) each re-derive it as cheap codegen over
     // the caller's already-cached source — a second full-width cache
-    // write costs more than it saves. No persist -> no unpersist below.
+    // write costs more than it saves.
     val (p, lanes) = Equity.prepareAndGram(df, cfg)
     val dummied = p.dummied
     val xCols = p.xCols
@@ -51,7 +51,7 @@ object Frontier {
     // -adjustment key; boundaries only balance buckets).
     val opt = Equity.optimizePrepared(dummied, xCols, p.names, p.split, lanes,
       cfg.copy(budget = 0.0, strategy = AllocationStrategy.Greedy), idCol,
-      keepAnnotated = true, wantPrefixBoundaries = true)
+      wantPrefixBoundaries = true)
     val totalNeed = opt.metrics.requiredBudget
     val maxB = maxBudget.getOrElse(totalNeed * 1.1)
     val safeMax = if (maxB < 1e-9) 1000.0 else maxB
@@ -125,9 +125,9 @@ object Frontier {
     // Fields are consumed immediately, never stored, so row-buffer reuse
     // is safe; null model values fail loudly as everywhere else.
     val stride = k + 1
-    val zero = new Array[Double](steps * stride)
-    val acc = proj.queryExecution.toRdd.treeAggregate(zero)(
-      seqOp = (buf, row) => {
+    val acc = Reduce(proj.queryExecution.toRdd, s"frontier: ${steps}-step sweep",
+      () => new Array[Double](steps * stride))(
+      (buf, row) => {
         if (row.anyNull)
           throw graft.core.InvalidArgument(
             "Frontier sweep read a null model value; drop null rows first")
@@ -151,8 +151,7 @@ object Frontier {
         }
         buf
       },
-      combOp = (a, b) => { var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a },
-      depth = 2)
+      Reduce.addDoubles)
 
     def statAt(xty: DenseVector[Double], yy: Double): (Double, Double, Boolean) = {
       val beta = covInv * xty
@@ -178,9 +177,6 @@ object Frontier {
       val (ts, p, sig) = statAt(xty, yy)
       FrontierPoint(budget, ts, p, sig)
     }
-    } finally {
-      joined.unpersist(blocking = false)
-      opt.releaseCache()
-    }
+    } finally { joined.unpersist(blocking = false); () }
   }
 }

@@ -1,12 +1,13 @@
 package graft.estimators
 
+import graft.core.Reduce
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Gaussian kernel density estimation + Silverman bandwidth
   * (`oaxaca_blinder/src/math/kde.rs:20-59`).
   *
-  * The grid evaluation is ONE `treeAggregate` pass accumulating all grid
+  * The grid evaluation is ONE [[Reduce]] pass accumulating all grid
   * sums per partition (no 100x explode, no collect of data). Weights are
   * normalized to 1 as in the reference.
   */
@@ -34,7 +35,6 @@ object Kde {
       (col(valueCol).cast("double") +: wCols.map(_.cast("double"))): _*)
     val m = grid.length
     val stride = m + 1 // grid sums ++ sum(w), per density
-    val zero = new Array[Double](stride * nL)
     val bw = bandwidths.toArray
     // lanes sharing a bandwidth share the kernel value: the exp() per
     // (row, grid point) is computed once per DISTINCT bandwidth, not
@@ -50,10 +50,9 @@ object Kde {
     // same doubles with zero copying. Fields are consumed immediately,
     // never stored, so row-buffer reuse is safe. Null model values threw
     // from the external route (Row.getDouble NPE); keep failing fast.
-    val acc = graft.core.Jobs.labeled(df.sparkSession,
-      s"kde: ${nL}-lane grid pass") {
-      proj.queryExecution.toRdd.treeAggregate(zero)(
-      seqOp = (buf, row) => {
+    val acc = Reduce(proj.queryExecution.toRdd, s"kde: ${nL}-lane grid pass",
+      () => new Array[Double](stride * nL))(
+      (buf, row) => {
         if (row.anyNull)
           throw graft.core.InvalidArgument(
             "KDE read a null value; drop null rows first")
@@ -98,9 +97,7 @@ object Kde {
         }
         buf
       },
-      combOp = (a, b) => { var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a },
-      depth = 2)
-    }
+      Reduce.addDoubles)
     Array.tabulate(nL) { l =>
       val base = l * stride
       val sw = acc(base + m)

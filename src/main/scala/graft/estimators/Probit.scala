@@ -43,11 +43,11 @@ object Probit {
     val betas = Array.fill(nLanes, nSys)(DenseVector.zeros[Double](k))
     val converged = Array.fill(nLanes, nSys)(false)
     val failed = Array.fill(nLanes, nSys)(false)
-    // fixed-plan iterations (see IrlsDesignLanes): the former route built
+    // fixed-plan iterations (see IrlsDesign): the former route built
     // one z/w Column pair PER SYSTEM per iteration — with hundreds of
     // bootstrap replicates, a giant new plan + codegen compile every
     // scan. The scalar probit working response matches Probit.fit's.
-    val design = new IrlsDesignLanes(df, targetCol, xCols, baseWCols,
+    val design = new IrlsDesign(df, targetCol, xCols, baseWCols.map(col),
       laneOf, nLanes)
     try {
       var iter = 0

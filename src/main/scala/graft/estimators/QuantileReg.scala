@@ -162,7 +162,8 @@ object QuantileReg {
         val active = (0 until nT).filter(i => !done(i))
         val activeTaus = active.map(taus).toArray
         val grams = design.gramMulti(
-          active.map(i => betas(i).toArray).toArray) {
+          active.map(i => Array(betas(i).toArray)).toArray,
+          new Array[Int](active.size)) {
           (y, _, xb, s, out) =>
             val r = y - xb
             val c = if (r > 0.0) activeTaus(s) else 1.0 - activeTaus(s)
@@ -170,7 +171,7 @@ object QuantileReg {
             out(1) = c / math.max(math.abs(r), Eps)
         }
         active.zipWithIndex.foreach { case (i, si) =>
-          val g = grams(si)
+          val g = grams(0)(si)
           val b = betas(i)
           // weighted SSR at the beta the weights were built from:
           // sum w*r^2 with w = c/max(|r|, Eps) == sum c*|r| wherever

@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.core.Reduce
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -8,8 +9,9 @@ import org.apache.spark.sql.functions._
   * assignment, or near-dup thresholding on real embedding corpora.
   *
   * Scale shape: the d-dim mean and the d x d second-moment Gram are ONE
-  * `treeAggregate` pass (d(d+1)/2 + d + 1 accumulator doubles — for
-  * d = 1024 that is ~4 MB per partition, driver gets one copy); the
+  * [[Reduce]] pass (d(d+1)/2 + d + 1 accumulator doubles — for
+  * d = 1024 that is ~4 MB per partition, the driver merges one copy per
+  * executor-side run, ~sqrt(partitions)); the
   * eigen-solve is driver-side power iteration on the d x d covariance
   * (trivial at any corpus size — d never grows with the data); the
   * projection / whitening transform is a pure codegen column expression
@@ -74,9 +76,9 @@ object Embeddings {
     val d = proj.select(size(col(proj.columns.head))).head().getInt(0)
     val tri = d * (d + 1) / 2
     // layout: [0] = n, [1..d] = sums, [1+d ..] = upper-triangle products
-    val zero = new Array[Double](1 + d + tri)
-    val acc = proj.rdd.treeAggregate(zero)(
-      seqOp = (buf, row) => {
+    val acc = Reduce(proj.rdd, s"pca: ${d}-dim moments pass",
+      () => new Array[Double](1 + d + tri))(
+      (buf, row) => {
         val x = row.getSeq[Double](0)
         require(x.length == d,
           s"ragged embedding: expected dim $d, got ${x.length}")
@@ -92,10 +94,7 @@ object Embeddings {
         }
         buf
       },
-      combOp = (a, b) => {
-        var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a
-      },
-      depth = 2)
+      Reduce.addDoubles)
     val n = acc(0).toLong
     require(n >= 2, s"need at least 2 vectors to fit a covariance, got $n")
     val mean = Array.tabulate(d)(i => acc(1 + i) / n)

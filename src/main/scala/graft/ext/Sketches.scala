@@ -1,11 +1,12 @@
 package graft.ext
 
+import graft.core.Reduce
 import org.apache.spark.sql.{Column, DataFrame, functions => F}
 
 /** Mergeable frequency sketches — the approximate-aggregation pattern
   * for corpora where exact per-token state is too big: each partition
   * folds its rows into a fixed depth x width count grid, grids add
-  * elementwise up the treeAggregate combiner, and the driver holds one
+  * elementwise in partition order ([[Reduce]]), and the driver holds one
   * O(depth * width) result no matter the corpus size. Estimates
   * overcount only (min over depth rows), never undercount.
   *
@@ -59,9 +60,8 @@ object Sketches {
     def merge(other: CountMin): CountMin = {
       require(depth == other.depth && width == other.width &&
         seed == other.seed, "sketch shapes/seeds differ")
-      val out = Array.tabulate(depth, width)((r, b) =>
-        cells(r)(b) + other.cells(r)(b))
-      CountMin(depth, width, seed, total + other.total, out)
+      CountMin(depth, width, seed, total + other.total,
+        cells.zip(other.cells).map { case (a, b) => Reduce.addLongs(a.clone, b) })
     }
   }
 
@@ -90,8 +90,7 @@ object Sketches {
     }
     def merge(other: LinearCounter): LinearCounter = {
       require(m == other.m && seed == other.seed, "sketch shapes/seeds differ")
-      LinearCounter(m, seed,
-        bits.zip(other.bits).map { case (a, b) => a | b })
+      LinearCounter(m, seed, Reduce.orLongs(bits.clone, other.bits))
     }
   }
 
@@ -99,7 +98,7 @@ object Sketches {
     md5Hash56(s"lc:$seed:$item")
 
   /** Per-group linear counters over whitespace tokens, ALL groups in
-    * ONE treeAggregate pass (per-group bitmap lanes — the GroupedOls
+    * ONE [[Reduce]] pass (per-group bitmap lanes — the GroupedOls
     * pattern): a tiny distinct-levels job, then one scan folding each
     * partition's (group, token) stream into |groups| bitmaps of m bits.
     * Null groups are skipped. */
@@ -113,9 +112,9 @@ object Sketches {
     val toks = graft.prep.Prep.fanOut(
       df.select(F.col(groupCol).cast("string"),
         F.split(F.col(textCol), "\\s+").as("__toks__")))
-    val zero = new Array[Long](levels.length * words)
-    val acc = toks.rdd.treeAggregate(zero)(
-      seqOp = (buf, row) => {
+    val acc = Reduce(toks.rdd, s"sketch: ${levels.length}-lane linear counting",
+      () => new Array[Long](levels.length * words))(
+      (buf, row) => {
         if (!row.isNullAt(0)) {
           val base = idx(row.getString(0)) * words
           val ts = row.getSeq[String](1)
@@ -131,10 +130,7 @@ object Sketches {
         }
         buf
       },
-      combOp = (a, b) => {
-        var i = 0; while (i < a.length) { a(i) |= b(i); i += 1 }; a
-      },
-      depth = 2)
+      Reduce.orLongs)
     levels.map { l =>
       l -> LinearCounter(m, seed,
         acc.slice(idx(l) * words, (idx(l) + 1) * words))
@@ -178,7 +174,7 @@ object Sketches {
     def merge(other: Bloom): Bloom = {
       require(m == other.m && k == other.k && seed == other.seed,
         "bloom shapes/seeds differ")
-      Bloom(m, k, seed, bits.zip(other.bits).map { case (a, b) => a | b })
+      Bloom(m, k, seed, Reduce.orLongs(bits.clone, other.bits))
     }
   }
 
@@ -205,15 +201,15 @@ object Sketches {
   private[ext] def bfHash(seed: Long, item: String): Long =
     md5Hash56(s"bf:$seed:$item")
 
-  /** Bloom over the values of `itemCol` in ONE treeAggregate pass. */
+  /** Bloom over the values of `itemCol` in ONE [[Reduce]] pass. */
   def bloomOf(df: DataFrame, itemCol: String, m: Int = 4096, k: Int = 4,
       seed: Long = 7L): Bloom = {
     require(m >= 64 && m % 64 == 0, "m must be a positive multiple of 64")
     require(k >= 1, "k must be >= 1")
     val items = df.select(F.col(itemCol).cast("string")).na.drop()
-    val zero = new Array[Long](m / 64)
-    val acc = items.rdd.treeAggregate(zero)(
-      seqOp = (buf, row) => {
+    val acc = Reduce(items.rdd, s"sketch: ${m}-bit bloom",
+      () => new Array[Long](m / 64))(
+      (buf, row) => {
         val (h1, h2) = CountMin.split(bfHash(seed, row.getString(0)))
         var r = 0
         while (r < k) {
@@ -223,16 +219,13 @@ object Sketches {
         }
         buf
       },
-      combOp = (a, b) => {
-        var i = 0; while (i < a.length) { a(i) |= b(i); i += 1 }; a
-      },
-      depth = 2)
+      Reduce.orLongs)
     Bloom(m, k, seed, acc)
   }
 
   /** Build a count-min sketch of whitespace tokens of `textCol` in ONE
-    * treeAggregate pass (the corpus never shuffles; partial grids merge
-    * pairwise). The input fans out first: token hashing is heavy
+    * [[Reduce]] pass (the corpus never shuffles; partial grids add in
+    * partition order). The input fans out first: token hashing is heavy
     * per-row work and a single-file scan would otherwise run it on one
     * task. */
   def countMinTokens(df: DataFrame, textCol: String, depth: Int = 4,
@@ -240,9 +233,9 @@ object Sketches {
     require(depth >= 1 && width >= 2, "need depth >= 1, width >= 2")
     val toks = graft.prep.Prep.fanOut(
       df.select(F.split(F.col(textCol), "\\s+").as("__toks__")))
-    val zero = new Array[Long](depth * width + 1) // grid ++ total
-    val acc = toks.rdd.treeAggregate(zero)(
-      seqOp = (buf, row) => {
+    val acc = Reduce(toks.rdd, s"sketch: ${depth}x${width} count-min",
+      () => new Array[Long](depth * width + 1))( // grid ++ total
+      (buf, row) => {
         val ts = row.getSeq[String](0)
         var i = 0
         while (i < ts.length) {
@@ -260,10 +253,7 @@ object Sketches {
         }
         buf
       },
-      combOp = (a, b) => {
-        var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a
-      },
-      depth = 2)
+      Reduce.addLongs)
     CountMin(depth, width, seed, acc(depth * width),
       Array.tabulate(depth, width)((r, b) => acc(r * width + b)))
   }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
 /** Poisson(1) bootstrap draw from a (row-hash, seed) pair as a NATIVE
   * codegen expression: `poisson1(mix(hash, seed))`, bit-identical to the
   * draws [[graft.core.Gram.computeGrouped]] makes inside its
-  * treeAggregate kernel (`Gram.scala` `mix`/`poisson1`). Replaces the
+  * Reduce kernel (`Gram.scala` `mix`/`poisson1`). Replaces the
   * ScalaUDF previously used by the Heckman bootstrap path — a UDF is a
   * codegen fence with per-row boxing; this stays inside whole-stage
   * codegen as a static Java call. Both children must be LongType

@@ -171,9 +171,10 @@ class SeqPackLmSpec extends SparkSpec {
     assert(!conv) // tol = 0 can never converge: exactly maxIter steps ran
     val (_, b3b, _) = QualityClassifier.score(
       df, col("is_ref"), Seq("__f__" -> col("x")), maxIter = 3, tol = 0.0)
-    // replay agrees to FP-churn precision (treeAggregate combine order
-    // varies with task timing; outputs are rounded to 6 decimals)
-    assert(norm2(b3, b3b) < 1e-9)
+    // replay is exact: Reduce merges partials in partition order, never
+    // in task-completion order
+    assert(b3.map(java.lang.Double.doubleToRawLongBits) ==
+      b3b.map(java.lang.Double.doubleToRawLongBits))
     val (_, b1, _) = QualityClassifier.score(
       df, col("is_ref"), Seq("__f__" -> col("x")), maxIter = 1, tol = 0.0)
     assert(norm2(b3, b1) > 1e-3) // the extra pinned steps moved the betas

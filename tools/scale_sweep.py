@@ -111,7 +111,8 @@ def cpu_jiffies():
             parts = f.readline().split()
         vals = [int(x) for x in parts[1:11]]
         steal = vals[7] if len(vals) > 7 else 0
-        return sum(vals) - vals[3] - vals[4], steal, sum(vals)
+        # busy excludes steal: stolen jiffies are time the guest did NOT run
+        return sum(vals) - vals[3] - vals[4] - steal, steal, sum(vals)
     except Exception:
         return 0, 0, 0
 
